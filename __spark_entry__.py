@@ -4869,7 +4869,7 @@ def oracle_sql() -> dict[str, str]:
                    (SELECT CAST(count(*) AS BIGINT) FROM p) AS n_probe,
                    (SELECT CAST(count(*) AS BIGINT) FROM stored) AS n_slots,
                    (SELECT CAST(count(*) AS BIGINT) FROM fps) AS n_false_pos,
-                   (SELECT (10000 * (SELECT count(*) FROM fps)) // count(*) FROM p) AS fpr_bp
+                   (SELECT (10000 * (SELECT count(*) FROM fps)) // greatest(count(*), 1) FROM p) AS fpr_bp
         """,
         "crawl_bloom_audit": """
             WITH bkeys AS (
@@ -4903,7 +4903,7 @@ def oracle_sql() -> dict[str, str]:
                    (SELECT CAST(count(*) AS BIGINT) FROM bpos) AS n_bits_set,
                    (SELECT CAST(count(*) AS BIGINT) FROM fps) AS n_false_pos,
                    (10000 * (SELECT count(*) FROM fps))
-                   // (SELECT count(*) FROM pkeys) AS fpr_bp
+                   // greatest((SELECT count(*) FROM pkeys), 1) AS fpr_bp
         """,
         # recursive one-hop walk — algorithmic diversity vs pointer doubling
         "crawl_redirects": """

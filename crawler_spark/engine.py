@@ -22,11 +22,14 @@ Per-round driver work is kept O(|wave|), never O(|seen|):
 - the Bloom pre-filter is maintained incrementally — each round ORs in a
   bitmap built from that round's seen delta (wave-bounded); the full-table
   build runs only once, on first crossing the threshold or after resume;
-- per-task outcome counts ride the scratch WRITES as Observation metrics
-  (no extra jobs or scans; the only remaining accounting job is the
-  link/retry (task, pid) count that doubles as the dense-seq offset
+- per-task outcome counts ride the cand, wave and parsed WRITES as
+  Observation metrics (no extra jobs or scans; the only accounting job is
+  the link/retry (task, bucket) count that doubles as the dense-seq offset
   source), and the next-frontier size is derived arithmetically instead
-  of re-scanning the written snapshot.
+  of re-scanning the written snapshot. Observations carry O(#tasks)
+  expressions: tasks are preset parser configs (reference: a handful,
+  engine/schedule.go preset task registry) — config-scale like rules,
+  never data-scale.
 """
 
 from __future__ import annotations
@@ -34,6 +37,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, replace
 
@@ -43,7 +47,6 @@ from pyspark.sql import functions as F
 from . import schemas
 from .state import SnapshotStore
 from .textcore import (
-    LimitTier,
     Rule,
     TaskCfg,
     initial_carry,
@@ -54,15 +57,8 @@ from .operators.canon import with_canonical
 from .operators.dedup import anti_join_seen, build_bloom, or_blooms
 from .operators.fetch import GraphFetcher
 from .operators.parse import parse_fetched
-from .operators.seq import finalize_dense_seq, prepare_dense_seq, rank_key_col
+from .operators.seq import finalize_dense_seq, prepare_dense_seq
 from .operators.topk import budgeted_topk
-
-
-# Above this many configured tasks, per-task Observation expressions stop
-# being plan-size-free and the engine falls back to the grouped-count job.
-# Tasks are preset parser configs (reference: a handful, engine/schedule.go
-# preset task registry) — config-scale like rules, never data-scale.
-_OBS_MAX_TASKS = 256
 
 
 def _bucket_meta(bucket_rows: int, counts_rows) -> dict:
@@ -235,6 +231,9 @@ class CrawlEngine:
         # pruned-pop block in _run_round). 0 disables bucketing.
         self.frontier_bucket_rows = int(frontier_bucket_rows)
         self._force_frontier_compact = False
+        # the latest round's pruned pop (targets, widen rounds, survivors),
+        # None when it read the full view — shows whether and how far the
+        # pruner engaged without re-running the round
         self._last_prune: dict | None = None
         self.spark = spark
         self.store = SnapshotStore(spark, state_dir)
@@ -340,13 +339,30 @@ class CrawlEngine:
         """Label the next Spark jobs (shows up in UI + event logs)."""
         self.spark.sparkContext.setJobDescription(f"r{rnd}:{what}")
 
-    def _seq_parts(self, n_rows: int | None) -> int | None:
+    def _task_sums(self, kind: str, cond=None) -> list:
+        """Observation expressions ``{kind}::{task}``: per configured task,
+        the number of observed rows of that task (matching ``cond``)."""
+        out = []
+        for t in self.tasks:
+            is_t = F.col("task") == t
+            out.append(
+                F.sum(F.when(is_t if cond is None else is_t & cond, 1)).alias(
+                    f"{kind}::{t}"
+                )
+            )
+        return out
+
+    def _per_task(self, m: dict, kind: str) -> dict[str, int]:
+        """The nonzero ``_task_sums(kind)`` of an Observation result, by
+        task (round metrics emit rows only for participating tasks)."""
+        return {
+            t: int(m[f"{kind}::{t}"]) for t in self.tasks if m[f"{kind}::{t}"]
+        }
+
+    def _seq_parts(self, n_rows: int) -> int:
         """Bucket count for a dense-seq shuffle sized to the KNOWN row
         count (from this round's Observations): ~50k rows/bucket, capped
-        at the configured shuffle width. None (count unknown — the
-        >_OBS_MAX_TASKS fallback) keeps the configured default."""
-        if n_rows is None:
-            return None
+        at the configured shuffle width."""
         return max(1, min(self.shuffle_parts, -(-n_rows // 50_000)))
 
     def _scratch(self, df, rnd: int, name: str):
@@ -357,11 +373,11 @@ class CrawlEngine:
         O(1) to analyze. The alternatives both lose: .cache() keeps the
         full expression lineage in every consumer's LOGICAL plan, and the
         CacheManager re-canonicalizes that tree per referencing job for
-        cache matching (measured ~4s of driver time just to PLAN the
-        8-branch accounting job — a per-round constant that caps N->4N
-        scaling); .localCheckpoint() cuts the plan but stores object rows,
-        losing column pruning + Tungsten format (measured 6x slower on a
-        400k fat wave). At production scale these scratch frames are the
+        cache matching (measured ~4s of driver time just to PLAN a
+        multi-branch accounting job over these frames — a per-round
+        constant that caps N->4N scaling); .localCheckpoint() cuts the
+        plan but stores object rows, losing column pruning + Tungsten
+        format (measured 6x slower on a 400k fat wave). At production scale these scratch frames are the
         per-round working tables next to the Iceberg frontier snapshots.
         """
         path = os.path.join(self.store.root, "scratch", f"r{rnd:05d}", name)
@@ -520,7 +536,7 @@ class CrawlEngine:
         # what to write, or read_through would see it forever
         self.store.clean_round(rnd)
         self._drop_scratch(rnd)
-        fr_round = man.get("frontier_round", prev)
+        fr_round = man["frontier_round"]
         fr_base = man.get("frontier_base")
         if fr_base is not None:
             # lazy GC of deltas folded into the committed base (safe only
@@ -540,8 +556,8 @@ class CrawlEngine:
         # round reads was built key-unique and reload-free (init_state
         # probe, or deferred∪retries of a unique wave with no new links —
         # all disjoint subsets of an already-deduped candidate set)
-        frontier_unique = bool(man.get("frontier_unique"))
-        n_failed_once = man.get("failed_once_count")
+        frontier_unique = bool(man["frontier_unique"])
+        n_failed_once = man["failed_once_count"]
 
         # dynamic seeds queued by run_task: seq-stamped here, AFTER the
         # previous round's links/retries (manifest max_seq), so queue
@@ -573,7 +589,6 @@ class CrawlEngine:
             name: task_budget(carries[name], list(t.limits), self.round_s)
             for name, t in self.tasks.items()
         }
-        use_obs = len(self.tasks) <= _OBS_MAX_TASKS
         # FUSED identity round: the manifest's per-task frontier counts
         # (known arithmetically when the frontier was built) prove every
         # task's candidate set fits its budget — expire/dedup only ever
@@ -584,11 +599,9 @@ class CrawlEngine:
         # parse -> parsed-delta write, and all round counts ride its
         # Observations. This is the steady-state fat-wave shape (a 10^10-URL
         # frontier round is budget-unbound most rounds).
-        fcounts_prev = man.get("frontier_counts")
+        fcounts_prev = man["frontier_counts"]
         fused = (
-            use_obs
-            and fcounts_prev is not None
-            and not self._hostcap_active
+            not self._hostcap_active
             and all(
                 n + pending_counts.get(t, 0) <= budgets.get(t, 1 << 40)
                 for t, n in fcounts_prev.items()
@@ -602,9 +615,7 @@ class CrawlEngine:
         # seen-dedup inputs, needed by the candidate filters below AND the
         # pruned-pop widening loop. Seen size is a manifest counter
         # (appended rows), never a table scan.
-        n_seen = man.get("seen_count")
-        if n_seen is None:  # manifest written before the counter existed
-            n_seen = seen.count()
+        n_seen = man["seen_count"]
         bloom = None
         if n_seen >= self.bloom_min_seen:
             if self._bloom is None:
@@ -651,8 +662,7 @@ class CrawlEngine:
         # cannot substitute in the pop order), widen any short task, redo.
         # Gates: frontier_unique (no cross-row dedup => candidate filters
         # are row-local), no queued seeds, no host cap (host budgets are
-        # not task-prefix-coverable), observation accounting, and a
-        # bucketed base in the manifest.
+        # not task-prefix-coverable), and a bucketed base in the manifest.
         self._last_prune = None
         pruned_partial = False
         bmeta = (
@@ -663,11 +673,9 @@ class CrawlEngine:
         if (
             bmeta
             and not fused
-            and use_obs
             and frontier_unique
             and not stamped_seed_rows
             and not self._hostcap_active
-            and fcounts_prev is not None
             and fr_base is not None
         ):
             targets = {
@@ -755,14 +763,11 @@ class CrawlEngine:
                 ).select("key", "r.*", "_lseqs")
             else:
                 deduped = deduped.select("key", "r.*")
-        # Per-task round counts ride the round's WRITE jobs as Observation
-        # metrics — computed inside jobs the round already runs, so the
-        # old 8-branch accounting job (6 extra pruned scans of the scratch
-        # frames + their job latencies, a per-round constant that caps
-        # N->4N scaling) shrinks to the one link/retry count job below.
-        # Tasks are a config-scale dim (a handful of presets, like rules —
-        # never data-scale like hosts), so #exprs = O(#tasks) is bounded;
-        # _OBS_MAX_TASKS guards the assumption.
+        # Per-task round counts ride the round's WRITE jobs (the cand, wave
+        # and parsed writes) as Observation metrics — computed inside jobs
+        # the round already runs, with no extra scans; the one link/retry
+        # count job below is the only accounting job. #exprs = O(#tasks):
+        # each per-task sum costs every observed row one more predicate.
         self._desc(rnd, "cand(expire+dedup)")
         if frontier_unique:
             cand_in = deduped  # reload-free by the same proof
@@ -775,21 +780,15 @@ class CrawlEngine:
             cand_in = deduped.unionByName(
                 reload_branch.select(*deduped.columns)
             )
-        obs_cand = None
-        cand_counts: dict[str, int] | None = None
-        if use_obs:
-            obs_cand = Observation()
-            cand_in = cand_in.observe(
-                obs_cand,
-                F.count(F.lit(1)).alias("n"),
-                # reload rows bypass dedup, so only a reload-free candidate
-                # set proves the NEXT frontier key-unique (flag propagation)
-                F.sum(F.col("reload").cast("int")).alias("nreload"),
-                *[
-                    F.sum(F.when(F.col("task") == t, 1)).alias(f"t::{t}")
-                    for t in self.tasks
-                ],
-            )
+        obs_cand = Observation()
+        cand_in = cand_in.observe(
+            obs_cand,
+            F.count(F.lit(1)).alias("n"),
+            # reload rows bypass dedup, so only a reload-free candidate
+            # set proves the NEXT frontier key-unique (flag propagation)
+            F.sum(F.col("reload").cast("int")).alias("nreload"),
+            *self._task_sums("t"),
+        )
         dedup_losers = None  # delta mode: same-key non-winners to tombstone
         if fused:
             # no scratch, no barrier: the candidate plan IS the wave and
@@ -802,8 +801,6 @@ class CrawlEngine:
                 wave = wave.repartition(
                     self.shuffle_parts, F.xxhash64("host", "key")
                 )
-            n_cand = n_wave = None
-            used = None
         else:
             cand = self._scratch(cand_in, rnd, "cand")
             if "_lseqs" in cand.columns:
@@ -811,34 +808,23 @@ class CrawlEngine:
                     F.explode("_lseqs").alias("seq")
                 )
                 cand = cand.drop("_lseqs")
-            if use_obs:
-                cand_m = obs_cand.get
-                n_cand = int(cand_m["n"] or 0)
-                # per-task candidate counts, free by-product of the scratch
-                # write — lets the task-budget topk skip its own counts job
-                cand_counts = {
-                    t: int(cand_m[f"t::{t}"] or 0)
-                    for t in self.tasks
-                    if cand_m[f"t::{t}"]
-                }
-            else:
-                n_cand = cand.count()  # parquet footer count — no data scan
+            cand_m = obs_cand.get
+            n_cand = int(cand_m["n"] or 0)
+            # per-task candidate counts, free by-product of the scratch
+            # write — lets the task-budget topk skip its own counts job
+            cand_counts = self._per_task(cand_m, "t")
 
             # 3-4. budget top-k per task, then host-cap pass
             self._desc(rnd, "wave(topk)")
             # identity fast path (the measured-counts variant of the fused
-            # proof, for rounds whose manifest lacked frontier counts —
-            # e.g. first round after resume from an older store): the
-            # cand-scratch Observation proved every task's candidate count
-            # fits its budget and no host cap is active, so the budgeted
-            # top-k is a no-op filter. Reuse the cand scratch as the wave.
-            identity_wave = (
-                cand_counts is not None
-                and not self._hostcap_active
-                and all(
-                    n <= budgets.get(t, 1 << 40)
-                    for t, n in cand_counts.items()
-                )
+            # proof, for rounds whose manifest counts — an upper bound that
+            # includes filter-dead rows and queued seeds — exceeded a budget
+            # the surviving candidates fit): the cand-scratch Observation
+            # proved every task's candidate count fits its budget and no
+            # host cap is active, so the budgeted top-k is a no-op filter.
+            # Reuse the cand scratch as the wave.
+            identity_wave = not self._hostcap_active and all(
+                n <= budgets.get(t, 1 << 40) for t, n in cand_counts.items()
             )
             if identity_wave:
                 wave = cand
@@ -864,55 +850,23 @@ class CrawlEngine:
                     wave_in = wave.repartition(
                         self.shuffle_parts, F.xxhash64("host", "key")
                     )
-                obs_wave = None
-                if use_obs:
-                    obs_wave = Observation()
-                    wave_in = wave_in.observe(
-                        obs_wave,
-                        F.count(F.lit(1)).alias("n"),
-                        *[
-                            F.sum(F.when(F.col("task") == t, 1)).alias(f"t::{t}")
-                            for t in self.tasks
-                        ],
-                    )
+                obs_wave = Observation()
+                wave_in = wave_in.observe(
+                    obs_wave, F.count(F.lit(1)).alias("n"), *self._task_sums("t")
+                )
                 wave = self._scratch(wave_in, rnd, "wave")
-                if use_obs:
-                    wave_m = obs_wave.get
-                    n_wave = int(wave_m["n"] or 0)
-                    used = {
-                        t: int(wave_m[f"t::{t}"] or 0)
-                        for t in self.tasks
-                        if wave_m[f"t::{t}"]
-                    }
-                else:
-                    n_wave = used = None  # grouped-count fallback fills these
+                wave_m = obs_wave.get
+                n_wave = int(wave_m["n"] or 0)
+                used = self._per_task(wave_m, "t")
 
-        # all-deferred round, observation mode: known BEFORE fetch/parse —
-        # budgets accrue, frontier unchanged, zero further jobs this round.
-        # (Never reached fused: fused proves counts <= budgets, so a zero
-        # wave implies a zero frontier, which set `done` last round.)
-        if use_obs and not fused:
+            # all-deferred round: known BEFORE fetch/parse — zero further
+            # jobs this round. Pruned n_cand counts only the read prefix —
+            # emptiness of the prefix proves nothing about the unread buckets.
             if n_wave == 0:
-                for name, t in self.tasks.items():
-                    carries[name] = [
-                        tier_carry_after(c, tier, self.round_s, 0)
-                        for c, tier in zip(carries[name], t.limits)
-                    ]
-                # pruned n_cand counts only the read prefix — emptiness of
-                # the prefix proves nothing about the unread buckets
-                done = n_cand == 0 and not pruned_partial
-                new_man = self._advance_manifest(
-                    man, rnd, carries, used, max_seq, done, n_seen,
-                    frontier_counts=fcounts_prev,
+                return self._commit_idle_round(
+                    man, rnd, carries, max_seq, n_seen, t0,
+                    done=n_cand == 0 and not pruned_partial,
                 )
-                new_man["frontier_round"] = man.get("frontier_round", prev)
-                new_man["stats"] = dict(
-                    round=rnd, selected=0, fetched_ok=0, failed=0,
-                    new_links=0, items=0, wall_s=time.time() - t0,
-                )
-                self.store.commit(rnd, new_man)
-                self._drop_scratch(rnd)
-                return new_man
 
         # 5-6. fetch + parse in ONE pass (seen marking is folded into the
         # post-fetch delta: mark-before-fetch + unmark-on-failure ≡ add iff
@@ -926,35 +880,21 @@ class CrawlEngine:
         # column-prunes that flat parquet scan.
         self._desc(rnd, "fetch+parse")
         fetched = self.fetcher.fetch(wave)
-        obs_parsed = None
+        obs_parsed = Observation()
 
         def _persist_parsed(df: DataFrame) -> DataFrame:
-            nonlocal obs_parsed
-            if use_obs:
-                obs_parsed = Observation()
-                exprs = []
-                for t in self.tasks:
-                    is_t = F.col("task") == t
-                    ok = F.col("ok")
-                    exprs += [
-                        F.sum(F.when(is_t & ok, 1)).alias(f"ok::{t}"),
-                        F.sum(F.when(is_t & ~ok, 1)).alias(f"fail::{t}"),
-                        F.sum(
-                            F.when(is_t & (ok | F.col("reload")), 1)
-                        ).alias(f"seen::{t}"),
-                        F.sum(
-                            F.when(is_t & ok & F.col("_p.item").isNotNull(), 1)
-                        ).alias(f"item::{t}"),
-                    ]
+            ok = F.col("ok")
+            df = df.observe(
+                obs_parsed,
+                *self._task_sums("ok", ok),
+                *self._task_sums("fail", ~ok),
+                *self._task_sums("item", ok & F.col("_p.item").isNotNull()),
+                F.sum(F.when(ok | F.col("reload"), 1)).alias("nseen"),
                 # total raw link matches — proves the link/retry machinery
                 # (canonicalize, robots, seq prep, count job) can be skipped
                 # when the wave discovered nothing and nothing failed
-                exprs.append(
-                    F.sum(
-                        F.when(F.col("ok"), F.size(F.col("_p.l_url")))
-                    ).alias("nlinks")
-                )
-                df = df.observe(obs_parsed, *exprs)
+                F.sum(F.when(ok, F.size(F.col("_p.l_url")))).alias("nlinks"),
+            )
             # the write-once barrier: parsed IS a store table (round delta),
             # not scratch — documents derive from it at read time. The
             # basePath partition read supplies `round`, so no round column
@@ -981,28 +921,28 @@ class CrawlEngine:
         # attached below the fetch join).
         if fused:
             cand_m = obs_cand.get
-            n_cand = int(cand_m["n"] or 0)
-            cand_counts = {
-                t: int(cand_m[f"t::{t}"] or 0)
-                for t in self.tasks
-                if cand_m[f"t::{t}"]
-            }
+            n_cand = n_wave = int(cand_m["n"] or 0)
+            cand_counts = self._per_task(cand_m, "t")
             used = dict(cand_counts)
-            n_wave = n_cand
+            # a fused round whose candidates all expired or were already
+            # seen reaches its zero wave here, after the (empty) parsed
+            # write; n_cand == n_wave == 0, so the frontier is exhausted
+            if n_wave == 0:
+                return self._commit_idle_round(
+                    man, rnd, carries, max_seq, n_seen, t0, done=True
+                )
         # The parsed Observation also proves emptiness per side: a wave
         # with zero raw links (the steady-state leaf-page shape) skips the
         # whole link pipeline (canonicalize, robots, seq prep, counts); a
         # wave with zero failures skips the retry pipeline. Each side gates
         # independently — hazard pages make failures nonzero on most real
         # waves while leaf waves still discover nothing.
-        skip_links = skip_retries = False
-        n_links_raw = n_failed_obs = None
-        if use_obs:
-            pm = obs_parsed.get
-            n_links_raw = int(pm["nlinks"] or 0)
-            n_failed_obs = sum(int(pm[f"fail::{t}"] or 0) for t in self.tasks)
-            skip_links = n_links_raw == 0
-            skip_retries = n_failed_obs == 0
+        pm = obs_parsed.get
+        n_links_raw = int(pm["nlinks"] or 0)
+        fail_counts = self._per_task(pm, "fail")
+        n_failed = sum(fail_counts.values())
+        skip_links = n_links_raw == 0
+        skip_retries = n_failed == 0
 
         links_prep = retries_prep = permanent = None
         if not skip_retries:
@@ -1017,7 +957,7 @@ class CrawlEngine:
             retries_prep = prepare_dense_seq(
                 retries_base.withColumnRenamed("seq", "_oseq"), ["_oseq"],
                 bound=max_seq,
-                n_parts=self._seq_parts(n_failed_obs),
+                n_parts=self._seq_parts(n_failed),
             )
         if not skip_links:
             links = with_canonical(
@@ -1042,147 +982,47 @@ class CrawlEngine:
             )
 
             # 9. seq assignment, fused (operators/seq.py): prepare the
-            # range-partitioned, id-tagged frames here (cached, still lazy);
-            # their per-partition counts ride the accounting union below and
-            # finalize_dense_seq attaches the dense seqs with no extra barrier.
+            # bucket-partitioned, rank-tagged frames here (cached, still
+            # lazy); their per-bucket counts ride the link/retry count job
+            # and finalize_dense_seq attaches the dense seqs with no extra
+            # barrier.
             links_prep = prepare_dense_seq(
                 links, ["parent_seq", "match_idx"], bound=max_seq,
                 n_parts=self._seq_parts(n_links_raw),
             )
 
-        # ---- accounting. With observations (the common path) every
-        # per-task count was already computed INSIDE the scratch-write jobs
-        # (cand/wave/parsed Observation metrics — no extra scans, no extra
-        # jobs); the only remaining job is the link/retry (task, pid) count,
-        # which doubles as the dense-seq offset source and the links_prep /
-        # retries_prep cache materialization. 'selected' (politeness 'used')
-        # still counts the WAVE, not the fetch-join output, so a fetcher
-        # returning duplicate rows can never inflate the carries. The
-        # fallback path (>_OBS_MAX_TASKS tasks) rides everything in one
-        # 8-branch union job over the scratch scans, as before.
-        self._desc(rnd, "accounting")
-
-        def _kind(df: DataFrame, k: str) -> DataFrame:
-            return df.select(
-                F.lit(k).alias("kind"),
-                F.col("task").alias("k2a"),
-                F.lit("").alias("k2b"),
-            )
-
-        def _kind_pid(df: DataFrame, k: str) -> DataFrame:
-            return df.select(
-                F.lit(k).alias("kind"),
-                F.col("task").alias("k2a"),
-                rank_key_col(df).cast("string").alias("k2b"),
-            )
-
-        cnt: dict[str, dict[tuple[str, str], int]] = {}
-
-        def _ingest(rows) -> None:
-            for r in rows:
-                cnt.setdefault(r["kind"], {})[(r["k2a"], r["k2b"])] = r["count"]
-
-        def by_task(kind: str) -> dict[str, int]:
-            out: dict[str, int] = {}
-            for (a, _), c in cnt.get(kind, {}).items():
-                out[a] = out.get(a, 0) + c
-            return out
-
-        def by_pid(kind: str) -> dict[int, int]:
-            out: dict[int, int] = {}
-            for (_, b), c in cnt.get(kind, {}).items():
-                out[int(b)] = out.get(int(b), 0) + c
-            return out
-
-        if use_obs:
-            # reading an Observation blocks only until its write job ran
-            # (they all have, above); zero-count tasks are dropped to match
-            # the grouped-count shape (metrics emit only participating
-            # tasks). wave_m/used/n_wave were read right after the wave
-            # scratch write (the all-deferred early return); pm was read
-            # for the skip_lr decision.
-            parsed_m = pm
-            for kind in ("ok", "fail", "seen", "item"):
-                cnt[kind] = {
-                    (t, ""): int(parsed_m[f"{kind}::{t}"] or 0)
-                    for t in self.tasks
-                    if parsed_m[f"{kind}::{t}"]
-                }
-        else:
-            _ingest(
-                _kind(cand, "cand")
-                .unionByName(_kind(wave, "selected"))
-                .unionByName(_kind(parsed.filter(F.col("ok")), "ok"))
-                .unionByName(_kind(parsed.filter(~F.col("ok")), "fail"))
-                .unionByName(
-                    _kind(parsed.filter(F.col("ok") | F.col("reload")), "seen")
-                )
-                .unionByName(_kind(items, "item"))
-                .unionByName(_kind_pid(links_prep, "link"))
-                .unionByName(_kind_pid(retries_prep, "retry"))
-                .groupBy("kind", "k2a", "k2b")
-                .count()
-                .collect()
-            )
-            n_cand = sum(by_task("cand").values())
-            used = by_task("selected")
-            n_wave = sum(used.values())
+        # ---- accounting. Every per-task count was already computed INSIDE
+        # the write jobs (cand/wave/parsed Observation metrics). 'selected'
+        # (politeness 'used') counts the WAVE, not the fetch-join output, so
+        # a fetcher returning duplicate rows can never inflate the carries.
         for name, t in self.tasks.items():
             carries[name] = [
                 tier_carry_after(c, tier, self.round_s, used.get(name, 0))
                 for c, tier in zip(carries[name], t.limits)
             ]
 
-        if n_wave == 0:
-            # all-deferred round: budgets accrue, frontier unchanged — no
-            # writes at all; the manifest keeps pointing at the last
-            # materialized frontier snapshot
-            done = n_cand == 0
-            new_man = self._advance_manifest(
-                man, rnd, carries, used, max_seq, done, n_seen,
-                frontier_counts=fcounts_prev,
-            )
-            new_man["frontier_round"] = man.get("frontier_round", prev)
-            new_man["stats"] = dict(
-                round=rnd, selected=0, fetched_ok=0, failed=0, new_links=0,
-                items=0, wall_s=time.time() - t0,
-            )
-            self.store.commit(rnd, new_man)
-            for df in (links_prep, retries_prep):
-                if df is not None:
-                    df.unpersist()
-            self._drop_scratch(rnd)
-            return new_man
-
-        # links/retries (task, slice) counts: the one remaining accounting
-        # job in observation mode — skipped entirely on all-deferred rounds
-        # (above); each proven-empty side (skip_links / skip_retries) stays
-        # out of the union. The job also materializes whichever prep caches
-        # the frontier build will read. It is DEFERRED into the write phase
+        # links/retries (task, _bucket) counts: the one accounting job. Each
+        # proven-empty side (skip_links / skip_retries) stays out of the
+        # union. The job also materializes whichever prep caches the
+        # frontier build will read. It is DEFERRED into the write phase
         # below (run concurrently with the independent delta writes, which
         # need only the parsed-Observation counts already in hand).
         counted = None
-        if use_obs and not (skip_links and skip_retries):
-            parts = []
-            if not skip_links:
-                parts.append(_kind_pid(links_prep, "link"))
-            if not skip_retries:
-                parts.append(_kind_pid(retries_prep, "retry"))
-            counted = parts[0]
-            for p in parts[1:]:
-                counted = counted.unionByName(p)
+        for kind, prep in (("link", links_prep), ("retry", retries_prep)):
+            if prep is not None:
+                part = prep.select(F.lit(kind).alias("kind"), "task", "_bucket")
+                counted = part if counted is None else counted.unionByName(part)
 
         frontier_cols = schemas.FRONTIER.fieldNames()
         empty_frontier = spark.createDataFrame([], schemas.FRONTIER)
 
-        ok_counts = by_task("ok")
-        fail_counts = by_task("fail")
-        item_counts = by_task("item")
-        n_seen_delta = sum(by_task("seen").values())
+        ok_counts = self._per_task(pm, "ok")
+        item_counts = self._per_task(pm, "item")
+        n_seen_delta = int(pm["nseen"] or 0)
         totals = {
             "selected": n_wave,
             "fetched_ok": sum(ok_counts.values()),
-            "failed": sum(fail_counts.values()),
+            "failed": n_failed,
             "items": sum(item_counts.values()),
         }
 
@@ -1276,34 +1116,39 @@ class CrawlEngine:
                 for table, df in writes
             ]
 
+            # driver-thread jobs from here on (the link/retry count, the
+            # pruned pop's wave-bucket count) are accounting; the pool's
+            # writes carry their own labels
+            self._desc(rnd, "accounting")
+            task_n = {"link": Counter(), "retry": Counter()}
+            bucket_n = {"link": Counter(), "retry": Counter()}
             if counted is not None:
-                _ingest(counted.groupBy("kind", "k2a", "k2b").count().collect())
-            link_counts = by_task("link")
-            retry_counts = by_task("retry")
+                for r in counted.groupBy("kind", "task", "_bucket").count().collect():
+                    task_n[r["kind"]][r["task"]] += r["count"]
+                    bucket_n[r["kind"]][r["_bucket"]] += r["count"]
+            link_counts = task_n["link"]
+            retry_counts = task_n["retry"]
 
             if skip_links:
                 # proven-empty by the parsed Observation: no rescans, no
                 # seq jobs, a literal empty frame in the frontier union
-                links = None
                 n_links = 0
                 new_links = empty_frontier
             else:
-                # finalize dense seqs from the fused slice counts
-                links = finalize_dense_seq(links_prep, by_pid("link"), max_seq)
+                # finalize dense seqs from the fused bucket counts
+                links = finalize_dense_seq(links_prep, bucket_n["link"], max_seq)
                 n_links = links._total
                 new_links = links.withColumn("attempt", F.lit(0)).select(
                     *frontier_cols
                 )
             if skip_retries:
-                retries = None
                 n_retries = 0
                 retries_f = empty_frontier
             else:
                 retries = finalize_dense_seq(
-                    retries_prep, by_pid("retry"), max_seq + n_links
+                    retries_prep, bucket_n["retry"], max_seq + n_links
                 )
                 n_retries = retries._total
-                retries = retries.drop("_oseq")
                 retries_f = retries.select(*frontier_cols)
 
             # ---- frontier advance: merge-on-read delta vs snapshot ----
@@ -1329,8 +1174,6 @@ class CrawlEngine:
             if (
                 self.frontier_mode == "delta"
                 and not self._force_frontier_compact
-                and n_wave is not None
-                and eff_cand is not None
                 and n_wave != eff_cand
                 and man.get("frontier_raw") is not None
             ):
@@ -1492,16 +1335,12 @@ class CrawlEngine:
         # per-task next-frontier counts: deferred (cand - used) + links +
         # retries — all already known. They are next round's PROOF that the
         # budgeted top-k is the identity (the fused-round precondition).
-        cand_by_task = (
-            cand_counts if cand_counts is not None else by_task("cand")
-        )
-        if pruned_partial:
-            # the pruned cand counted only the read prefix: advance the
-            # manifest totals arithmetically instead (an upper bound on
-            # live — filter-dead rows stay counted until a compaction
-            # round re-measures exactly; safe for the fused proof, which
-            # only fires when the bound fits the budgets)
-            cand_by_task = fcounts_prev
+        # The pruned cand counted only the read prefix: advance the
+        # manifest totals arithmetically instead (an upper bound on live —
+        # filter-dead rows stay counted until a compaction round re-measures
+        # exactly; safe for the fused proof, which only fires when the bound
+        # fits the budgets).
+        cand_by_task = fcounts_prev if pruned_partial else cand_counts
         fcounts_next: dict[str, int] = {}
         for t in {*cand_by_task, *link_counts, *retry_counts}:
             n = (
@@ -1520,14 +1359,11 @@ class CrawlEngine:
         # dedup ran over a reload-free candidate set.
         next_unique = bool(
             skip_links
-            and (
-                frontier_unique
-                or (use_obs and int(cand_m["nreload"] or 0) == 0)
-            )
+            and (frontier_unique or int(cand_m["nreload"] or 0) == 0)
         )
         new_man = self._advance_manifest(
-            man, rnd, carries, used, max_seq + n_links + n_retries, done,
-            n_seen + n_seen_delta, frontier_counts=fcounts_next,
+            man, rnd, carries, max_seq + n_links + n_retries, done,
+            n_seen + n_seen_delta, fcounts_next,
             frontier_unique=next_unique,
             failed_once_add=int(totals["failed"]),
         )
@@ -1544,9 +1380,7 @@ class CrawlEngine:
                 # tiny base of a fully-consumed round); old deltas are GC'd
                 # lazily at next round start, after this manifest commits
                 new_man["frontier_base"] = rnd
-                snap_counts = (
-                    snap_fut.result() if snap_fut is not None else None
-                )
+                snap_counts = snap_fut.result()
                 if snap_counts is not None:
                     bm = _bucket_meta(self.frontier_bucket_rows, snap_counts)
                     new_man["frontier_buckets"] = bm
@@ -1582,10 +1416,33 @@ class CrawlEngine:
         )
         new_man["fetch_count"] = man.get("fetch_count", 0) + n_wave
         self.store.commit(rnd, new_man)
-        for df in (getattr(links, "_ranked", None),
-                   getattr(retries, "_ranked", None)):
+        for df in (links_prep, retries_prep):
             if df is not None:
                 df.unpersist()
+        self._drop_scratch(rnd)
+        return new_man
+
+    def _commit_idle_round(
+        self, man: dict, rnd: int, carries: dict, max_seq: int, n_seen: int,
+        t0: float, done: bool,
+    ) -> dict:
+        """Commit a zero-wave round: budgets accrue, the frontier is
+        unchanged and nothing is written — the manifest keeps pointing at
+        the last materialized frontier."""
+        for name, t in self.tasks.items():
+            carries[name] = [
+                tier_carry_after(c, tier, self.round_s, 0)
+                for c, tier in zip(carries[name], t.limits)
+            ]
+        new_man = self._advance_manifest(
+            man, rnd, carries, max_seq, done, n_seen, man["frontier_counts"]
+        )
+        new_man["frontier_round"] = man["frontier_round"]
+        new_man["stats"] = dict(
+            round=rnd, selected=0, fetched_ok=0, failed=0, new_links=0,
+            items=0, wall_s=time.time() - t0,
+        )
+        self.store.commit(rnd, new_man)
         self._drop_scratch(rnd)
         return new_man
 
@@ -1594,11 +1451,10 @@ class CrawlEngine:
         man: dict,
         rnd: int,
         carries: dict,
-        used: dict,
         max_seq: int,
         done: bool,
         seen_count: int,
-        frontier_counts: dict[str, int] | None = None,
+        frontier_counts: dict[str, int],
         frontier_unique: bool | None = None,
         failed_once_add: int = 0,
     ) -> dict:
@@ -1614,16 +1470,10 @@ class CrawlEngine:
             "frontier_unique": bool(man.get("frontier_unique"))
             if frontier_unique is None
             else bool(frontier_unique),
-            "failed_once_count": (
-                int(man.get("failed_once_count") or 0) + int(failed_once_add)
-            )
-            if man.get("failed_once_count") is not None
-            else None,
+            "failed_once_count": int(man["failed_once_count"])
+            + int(failed_once_add),
+            "frontier_counts": {t: int(n) for t, n in frontier_counts.items()},
         }
-        if frontier_counts is not None:
-            out["frontier_counts"] = {
-                t: int(n) for t, n in frontier_counts.items()
-            }
         # delta-frontier bookkeeping rides through unchanged by default
         # (the main write path overrides after advancing the view); the
         # early-return paths (all-deferred / zero-wave rounds) leave the

@@ -357,7 +357,8 @@ def bloom_fpr_audit(
             "n_probe",
             "n_bits_set",
             "n_false_pos",
-            F.expr("(10000 * n_false_pos) div n_probe").alias("fpr_bp"),
+            # an empty probe set: 0, not a division by zero
+            F.expr("(10000 * n_false_pos) div greatest(n_probe, 1)").alias("fpr_bp"),
         )
     )
 
@@ -448,7 +449,8 @@ def cuckoo_fpr_audit(
             "n_probe",
             "n_slots",
             "n_false_pos",
-            F.expr("(10000 * n_false_pos) div n_probe").alias("fpr_bp"),
+            # an empty probe set: 0, not a division by zero
+            F.expr("(10000 * n_false_pos) div greatest(n_probe, 1)").alias("fpr_bp"),
         )
     )
 

@@ -147,6 +147,9 @@ def test_bloom_audit_no_false_negatives_and_sane_fpr(spark):
     # 10k positions in 65536 bits -> ~14% fill -> FPR ~ 0.14^5 ~ 5e-5
     assert audit["fpr_bp"] <= 50
     assert audit["n_bits_set"] <= 10000
+    # an empty probe set has no false positives (not a division by zero)
+    empty = bloom_fpr_audit(keys, other.limit(0), m_bits=1 << 16, k_hashes=5).first()
+    assert (empty["n_probe"], empty["n_false_pos"], empty["fpr_bp"]) == (0, 0, 0)
 
 
 def test_change_rate_estimate(spark):
@@ -308,3 +311,5 @@ def test_cuckoo_audit_no_false_negatives_and_sane_fpr(spark):
     row = cuckoo_fpr_audit(build, probe, m_buckets=1 << 14, f_bits=8).first()
     assert row["n_probe"] > 0 and row["n_slots"] <= row["n_build"]
     assert 0 <= row["fpr_bp"] < 500, row
+    empty = cuckoo_fpr_audit(build, probe.limit(0), m_buckets=1 << 14, f_bits=8).first()
+    assert (empty["n_probe"], empty["n_false_pos"], empty["fpr_bp"]) == (0, 0, 0)
