@@ -603,10 +603,13 @@ STEADY_SIZES = [
 ]
 
 
+STEADY_ARMS = ("delta", "rewrite")
+
+
 def run_steady_state_bench(spark) -> dict:
     """Steady-state (wave << frontier) round-cost evidence for the north
-    rule's central claim: in DELTA frontier mode a budget-bound round's
-    cost is O(wave + links), not O(frontier).
+    rule's central claim: with delta rounds a budget-bound round's cost is
+    O(wave + links), not O(frontier).
 
     Protocol: fixed wave budget W per round, frontier sizes S spanning a
     16x range (W << S for all of them), R rounds per run, per-round wall
@@ -618,10 +621,13 @@ def run_steady_state_bench(spark) -> dict:
     codegen warmup); steady_round_s = MIN over rounds 2..R (the same
     additive-noise floor estimator as the scaling protocol).
 
-    Read: delta's growth ratio steady(S_max)/steady(S_min) vs snapshot's.
-    Snapshot rewrites O(S) rows per round, so its ratio tracks the 16x
-    size ratio; delta appends O(W) and should stay near flat — the gap IS
-    the merge-on-read design working.
+    Arms: "delta" runs the engine's defaults (every size exceeds one
+    bucket, so budget-bound rounds append deltas); "rewrite" sets a
+    frontier_bucket_rows no frontier reaches, so every round rewrites the
+    frontier. Read: delta's growth ratio steady(S_max)/steady(S_min) vs
+    rewrite's. A rewrite round writes O(S) rows, so its ratio tracks the
+    16x size ratio; delta appends O(W) and should stay near flat — the gap
+    IS the merge-on-read design working.
     """
     import shutil
 
@@ -653,14 +659,17 @@ def run_steady_state_bench(spark) -> dict:
         "sizes": STEADY_SIZES,
     }
     try:
-        for mode in ("delta", "snapshot"):
+        for mode in STEADY_ARMS:
             per_size = {}
             for size in STEADY_SIZES:
                 d = _state_tmpdir("bench_steady_")
+                # the rewrite arm: a bucket no frontier can outgrow, so
+                # every round rewrites it
+                kw = {"frontier_bucket_rows": 1 << 62} if mode == "rewrite" else {}
                 try:
                     eng = CrawlEngine(
                         spark, f"{d}/state", GraphFetcher(web), tasks, rules,
-                        robots, round_s=60, frontier_mode=mode,
+                        robots, round_s=60, **kw,
                     )
                     eng.init_state(fat_frontier(spark, size))
                     stats = eng.run(max_rounds=STEADY_ROUNDS)
@@ -709,13 +718,13 @@ def _append_steady_md(steady: dict) -> None:
         f"codegen warmup; host interference noise is strictly additive, "
         f"so min is the consistent floor estimator — same logic as the "
         f"scaling protocol's min-over-runs). "
-        f"North-rule claim under test: delta-mode round cost is "
+        f"North-rule claim under test: delta-round cost is "
         f"O(wave+links), independent of frontier size.\n\n",
         "| mode | " + " | ".join(f"S={s}" for s in steady["sizes"]) +
         f" | growth over {steady['size_ratio']}x |\n",
         "|---|" + "---|" * (len(steady["sizes"]) + 1) + "\n",
     ]
-    for mode in ("delta", "snapshot"):
+    for mode in STEADY_ARMS:
         if mode not in steady:
             continue
         cells = " | ".join(

@@ -196,40 +196,46 @@ class CrawlEngine:
         bloom_min_seen: int = 50_000,
         bloom_bits: int = 1 << 22,
         typed_tables: bool = False,
-        frontier_mode: str = "snapshot",
+        frontier_mode: str = "delta",
         frontier_compact_factor: float = 2.0,
         frontier_bucket_rows: int = 65536,
         revisit_plan=None,
     ):
-        # ``frontier_mode``:
-        # - "snapshot": every round rewrites the surviving frontier (the
-        #   Iceberg MERGE copy-on-write analog). Simple, but a budget-bound
-        #   round (wave << frontier — the 10^10-URL steady state under
-        #   politeness) rewrites O(frontier) rows to consume O(wave).
-        # - "delta": merge-on-read. A budget-bound round appends only
-        #   links/retries (frontier_add) plus the consumed seqs — wave and
-        #   within-round dedup losers — as tombstones (frontier_del); reads
-        #   assemble base ∪ adds ∖ dels. Rows dropped by idempotent filters
-        #   (depth, closed-task, seen-key) stay physically present until
-        #   the base is rewritten — the filters re-drop them each read, and
-        #   a seen-key can never leave the append-only seen table, so none
-        #   can resurface. The base rewrite (rewrite_data_files analog)
-        #   triggers arithmetically when raw rows exceed
-        #   frontier_compact_factor x live rows, and is forced by dynamic
-        #   task open/close (a closed task's rows must not outlive a later
-        #   reopen). Budget-unbound rounds consume the whole view, so their
-        #   links∪retries output IS a fresh tiny base. Byte-parity with
-        #   snapshot mode is pinned by tests/test_frontier_delta.py.
-        if frontier_mode not in ("snapshot", "delta"):
+        # The frontier is a base snapshot plus per-round row appends
+        # (frontier_add) and consumed-seq tombstones (frontier_del); reads
+        # assemble base ∪ adds ∖ dels (merge-on-read). Each round picks its
+        # frontier write from the manifest's live count, in units of
+        # ``frontier_bucket_rows``:
+        # - live <= frontier_bucket_rows: the round rewrites the surviving
+        #   frontier (the Iceberg MERGE copy-on-write analog). Nothing is
+        #   tombstoned, so the round skips the dedup-loser list, the pruned
+        #   pop and the wave-bucket census.
+        # - larger: a budget-bound round (wave << frontier — the 10^10-URL
+        #   steady state under politeness) appends only links/retries/queued
+        #   seeds plus the consumed seqs — wave and within-round dedup
+        #   losers — as tombstones. Rows dropped by idempotent filters
+        #   (depth, closed-task, seen-key) stay physically present until the
+        #   base is rewritten — the filters re-drop them each read, and a
+        #   seen key never leaves the append-only seen table, so none can
+        #   resurface. The base rewrite (rewrite_data_files analog) runs
+        #   when raw rows would exceed frontier_compact_factor x live rows,
+        #   when the round consumed the whole view, and after a dynamic task
+        #   open/close (a closed task's rows must not outlive a reopen).
+        # Every base write (init_state included) sizes the frontier it
+        # writes: within one bucket it is plain parquet; larger, it is
+        # partitioned by (task, priority, seq div frontier_bucket_rows) —
+        # the pop sort key — so later rounds partition-prune their base read
+        # to the pop-order PREFIX covering the wave (O(wave) read, not
+        # O(frontier); see the pruned-pop block in _run_round).
+        # Parity of the two writes is pinned by tests/test_frontier_delta.py
+        # and tests/test_frontier_pruned.py. ``frontier_mode`` remains only
+        # as a keyword existing callers pass; "delta" is its one value.
+        if frontier_mode != "delta":
             raise ValueError(f"unknown frontier_mode {frontier_mode!r}")
-        self.frontier_mode = frontier_mode
         self.frontier_compact_factor = float(frontier_compact_factor)
-        # ``frontier_bucket_rows``: delta-mode bases are written partitioned
-        # by (task, priority, seq div bucket_rows) — the pop sort key — so a
-        # budget-bound round partition-prunes its base read to the pop-order
-        # PREFIX covering the wave (O(wave) read, not O(frontier); see the
-        # pruned-pop block in _run_round). 0 disables bucketing.
         self.frontier_bucket_rows = int(frontier_bucket_rows)
+        if self.frontier_bucket_rows < 1:
+            raise ValueError("frontier_bucket_rows must be >= 1")
         self._force_frontier_compact = False
         # the latest round's pruned pop (targets, widen rounds, survivors),
         # None when it read the full view — shows whether and how far the
@@ -422,10 +428,10 @@ class CrawlEngine:
             return
         self.tasks[name] = replace(t, closed=closed)
         self._rebuild_tasks_df()
-        # delta mode keeps filter-dropped rows physically in the view; a
+        # delta rounds keep filter-dropped rows physically in the view; a
         # task-closed change makes those drops non-idempotent (a reopened
-        # task must not resurrect rows a snapshot run would have removed),
-        # so the next round folds the view into a fresh base
+        # task must not resurrect rows a rewrite would have removed), so
+        # the next round folds the view into a fresh base
         self._force_frontier_compact = True
 
     def run_task(self, name: str, seed_rows: list[dict]) -> None:
@@ -434,6 +440,8 @@ class CrawlEngine:
         ``seed_rows``: FRONTIER-shaped dicts; ``seq``/``attempt`` are
         stamped at the start of the next round (after the previous round's
         links/retries), matching push-after-current-work queue arrival.
+        They leave the queue when a round commits them into the frontier;
+        a zero-wave round leaves them queued.
         The queue is in-memory, as is the reference's scheduler queue —
         on crash+resume the watch/loadResource layer re-issues runTasks
         (engine/schedule.go:500-523), i.e. the caller re-calls this.
@@ -445,20 +453,21 @@ class CrawlEngine:
 
     def init_state(self, seeds: DataFrame) -> None:
         """Round-0 snapshot. Seeds must be FRONTIER-shaped."""
-        bucket_rows = (
-            self.frontier_bucket_rows if self.frontier_mode == "delta" else 0
-        )
+        per_task = seeds.groupBy("task").agg(
+            F.max("seq").alias("mx"), F.count(F.lit(1)).alias("n")
+        ).collect()
+        n_seeds = sum(r["n"] for r in per_task)
+        # the rounds' size rule: a frontier within one bucket is a plain
+        # base; a larger one is bucketed for the pruned pop
+        bucket_rows = self.frontier_bucket_rows
         bcounts = self.store.write_frontier(
-            0, seeds, bucket_rows=bucket_rows or None
+            0, seeds, None if n_seeds <= bucket_rows else bucket_rows
         )
         empty_seen = self.spark.createDataFrame([], schemas.SEEN)
         self.store.append("seen", 0, empty_seen)
         self.store.append(
             "failed_once", 0, self.spark.createDataFrame([], "key string")
         )
-        per_task = seeds.groupBy("task").agg(
-            F.max("seq").alias("mx"), F.count(F.lit(1)).alias("n")
-        ).collect()
         max_seq = max((r["mx"] for r in per_task), default=None)
         # one-time global probe: a key-unique, reload-free seed set lets
         # round 1 skip the within-round dedup shuffle outright (the min_by
@@ -488,17 +497,11 @@ class CrawlEngine:
                 "frontier_unique": frontier_unique,
                 "failed_once_count": 0,
                 "done": False,
+                "frontier_base": 0,
+                "frontier_raw": int(n_seeds),
                 **(
-                    {
-                        "frontier_base": 0,
-                        "frontier_raw": int(sum(r["n"] for r in per_task)),
-                        **(
-                            {"frontier_buckets": _bucket_meta(bucket_rows, bcounts)}
-                            if bcounts is not None
-                            else {}
-                        ),
-                    }
-                    if self.frontier_mode == "delta"
+                    {"frontier_buckets": _bucket_meta(bucket_rows, bcounts)}
+                    if bcounts is not None
                     else {}
                 ),
             },
@@ -537,15 +540,11 @@ class CrawlEngine:
         self.store.clean_round(rnd)
         self._drop_scratch(rnd)
         fr_round = man["frontier_round"]
-        fr_base = man.get("frontier_base")
-        if fr_base is not None:
-            # lazy GC of deltas folded into the committed base (safe only
-            # AFTER the base's manifest committed, hence at round start)
-            self.store.drop_frontier_deltas(fr_base)
-        if fr_base is not None and fr_base < fr_round:
-            frontier = self.store.read_frontier_view(fr_base, fr_round)
-        else:
-            frontier = self.store.read_frontier(fr_round)
+        fr_base = man["frontier_base"]
+        # lazy GC of deltas folded into the committed base (safe only AFTER
+        # the base's manifest committed, hence at round start)
+        self.store.drop_frontier_deltas(fr_base)
+        frontier = self.store.read_frontier_view(fr_base, fr_round)
         seen = self.store.read_through("seen", prev)
         if seen is None:
             seen = spark.createDataFrame([], schemas.SEEN)
@@ -558,10 +557,18 @@ class CrawlEngine:
         # all disjoint subsets of an already-deduped candidate set)
         frontier_unique = bool(man["frontier_unique"])
         n_failed_once = man["failed_once_count"]
+        fcounts_prev = man["frontier_counts"]
+        # the frontier's size picks the round's write (see __init__): a
+        # frontier within one bucket is rewritten whole — no tombstones
+        small = (
+            sum(fcounts_prev.values()) + len(self._pending_seeds)
+            <= self.frontier_bucket_rows
+        )
 
         # dynamic seeds queued by run_task: seq-stamped here, AFTER the
         # previous round's links/retries (manifest max_seq), so queue
-        # arrival order matches the oracle's end-of-round push
+        # arrival order matches the oracle's end-of-round push. They stay
+        # queued until this round commits its frontier.
         pending_counts: dict[str, int] = {}
         stamped_seed_rows: list[dict] = []
         if self._pending_seeds:
@@ -573,10 +580,9 @@ class CrawlEngine:
                 rows.append(rr)
                 pending_counts[rr["task"]] = pending_counts.get(rr["task"], 0) + 1
             max_seq += len(rows)
-            self._pending_seeds = []
-            # delta mode: these rows exist only in this in-memory union —
-            # a delta round must persist them as frontier_add (waved/lost
-            # ones are simultaneously tombstoned, which nets out exactly)
+            # these rows exist only in this in-memory union — a delta round
+            # must persist them as frontier_add (waved/lost ones are
+            # simultaneously tombstoned, which nets out exactly)
             stamped_seed_rows = rows
             frontier = frontier.unionByName(
                 spark.createDataFrame(rows, schemas.FRONTIER)
@@ -599,7 +605,6 @@ class CrawlEngine:
         # parse -> parsed-delta write, and all round counts ride its
         # Observations. This is the steady-state fat-wave shape (a 10^10-URL
         # frontier round is budget-unbound most rounds).
-        fcounts_prev = man["frontier_counts"]
         fused = (
             not self._hostcap_active
             and all(
@@ -648,8 +653,8 @@ class CrawlEngine:
                 c = fresh.unionByName(reload_rows)
             return c
 
-        # ---- pruned pop (delta mode): read only the pop-order PREFIX of
-        # the bucketed base that covers this round's budgets, instead of
+        # ---- pruned pop (large frontier): read only the pop-order PREFIX
+        # of the bucketed base that covers this round's budgets, instead of
         # scanning O(frontier). Exactness: the chosen bucket set is
         # pop-order closed per task (_select_pop_prefix), so once the
         # prefix holds >= budget wave-ELIGIBLE base rows for a task (or
@@ -662,21 +667,18 @@ class CrawlEngine:
         # cannot substitute in the pop order), widen any short task, redo.
         # Gates: frontier_unique (no cross-row dedup => candidate filters
         # are row-local), no queued seeds, no host cap (host budgets are
-        # not task-prefix-coverable), and a bucketed base in the manifest.
+        # not task-prefix-coverable), a bucketed base in the manifest, and a
+        # frontier beyond one bucket (a smaller one is read whole anyway).
         self._last_prune = None
         pruned_partial = False
-        bmeta = (
-            man.get("frontier_buckets")
-            if self.frontier_mode == "delta"
-            else None
-        )
+        bmeta = man.get("frontier_buckets")
         if (
             bmeta
+            and not small
             and not fused
             and frontier_unique
             and not stamped_seed_rows
             and not self._hostcap_active
-            and fr_base is not None
         ):
             targets = {
                 t: max(2 * min(budgets.get(t, 0), 1 << 40), 1)
@@ -735,15 +737,16 @@ class CrawlEngine:
                 "key", *[c for c in cand.columns if c != "key"]
             )
         else:
-            # delta mode additionally needs the dedup LOSERS (same-key,
-            # non-winning rows): the reference contract drops them forever
-            # at this round (visited marked by the winner's pop), so the
-            # merge-on-read view must tombstone them — otherwise a loser
-            # would resurface and out-rank the winner's retry if the winner
-            # fails. collect_list rides the SAME single shuffle/aggregate;
-            # the loser-seq array column travels inside the existing cand
-            # scratch and is read back from it — zero extra jobs.
-            want_losers = self.frontier_mode == "delta" and not fused
+            # a round that may take the delta write additionally needs the
+            # dedup LOSERS (same-key, non-winning rows): the reference
+            # contract drops them forever at this round (visited marked by
+            # the winner's pop), so the merge-on-read view must tombstone
+            # them — otherwise a loser would resurface and out-rank the
+            # winner's retry if the winner fails. collect_list rides the
+            # SAME single shuffle/aggregate; the loser-seq array column
+            # travels inside the existing cand scratch and is read back
+            # from it — zero extra jobs.
+            want_losers = not small and not fused
             aggs = [
                 F.min_by(
                     F.struct(*[c for c in non_reload2.columns if c != "key"]),
@@ -789,7 +792,7 @@ class CrawlEngine:
             F.sum(F.col("reload").cast("int")).alias("nreload"),
             *self._task_sums("t"),
         )
-        dedup_losers = None  # delta mode: same-key non-winners to tombstone
+        dedup_losers = None  # same-key non-winners to tombstone
         if fused:
             # no scratch, no barrier: the candidate plan IS the wave and
             # flows straight into the fetch join; counts (incl. the
@@ -864,7 +867,7 @@ class CrawlEngine:
             # emptiness of the prefix proves nothing about the unread buckets.
             if n_wave == 0:
                 return self._commit_idle_round(
-                    man, rnd, carries, max_seq, n_seen, t0,
+                    man, rnd, carries, n_seen, t0,
                     done=n_cand == 0 and not pruned_partial,
                 )
 
@@ -929,7 +932,7 @@ class CrawlEngine:
             # write; n_cand == n_wave == 0, so the frontier is exhausted
             if n_wave == 0:
                 return self._commit_idle_round(
-                    man, rnd, carries, max_seq, n_seen, t0, done=True
+                    man, rnd, carries, n_seen, t0, done=True
                 )
         # The parsed Observation also proves emptiness per side: a wave
         # with zero raw links (the steady-state leaf-page shape) skips the
@@ -1151,14 +1154,15 @@ class CrawlEngine:
                 n_retries = retries._total
                 retries_f = retries.select(*frontier_cols)
 
-            # ---- frontier advance: merge-on-read delta vs snapshot ----
+            # ---- frontier advance: merge-on-read delta vs rewrite ----
             # A delta round appends O(links+retries) rows + O(wave+losers)
             # seq tombstones instead of rewriting the O(frontier) survivor
-            # set. Taken only when the deferred set is nonempty (otherwise
-            # links∪retries IS a fresh tiny base — write it), no config
-            # change forced a fold, and the arithmetic raw/live forecast
-            # stays under the compaction threshold (rewrite_data_files
-            # analog — the 1-in-K snapshot round amortizes to O(delta)).
+            # set. Taken only on a large frontier when the deferred set is
+            # nonempty (otherwise links∪retries IS a fresh tiny base —
+            # write it), no config change forced a fold, and the arithmetic
+            # raw/live forecast stays under the compaction threshold
+            # (rewrite_data_files analog — the 1-in-K rewrite round
+            # amortizes to O(delta)).
             delta_round = False
             raw_next = 0
             # pruned rounds never measured the full candidate set: use the
@@ -1171,19 +1175,21 @@ class CrawlEngine:
             eff_cand = (
                 sum(fcounts_prev.values()) if pruned_partial else n_cand
             )
+            # the next frontier's size is pure arithmetic over already-known
+            # counts — deferred (candidates minus wave; seq is frontier-
+            # unique) + new links + retries — so no re-scan is needed
+            n_frontier = (eff_cand - n_wave) + n_links + n_retries
             if (
-                self.frontier_mode == "delta"
+                not small
                 and not self._force_frontier_compact
                 and n_wave != eff_cand
-                and man.get("frontier_raw") is not None
             ):
                 raw_next = (
                     int(man["frontier_raw"])
                     + n_links + n_retries + len(stamped_seed_rows)
                 )
-                live_next = (eff_cand - n_wave) + n_links + n_retries
                 delta_round = raw_next <= self.frontier_compact_factor * max(
-                    live_next, 1
+                    n_frontier, 1
                 )
             if delta_round:
                 adds = []
@@ -1294,24 +1300,22 @@ class CrawlEngine:
             )
             snap_fut = None
             if not delta_round:
-                snap_bucket_rows = (
-                    self.frontier_bucket_rows
-                    if self.frontier_mode == "delta"
-                    else 0
-                )
                 snap_fut = pool.submit(
                     self._labeled, rnd, "frontier-snapshot",
                     self.store.write_frontier, rnd, next_frontier,
-                    snap_bucket_rows or None,
+                    # init_state's rule, on the frontier this round writes
+                    None
+                    if n_frontier <= self.frontier_bucket_rows
+                    else self.frontier_bucket_rows,
                 )
                 futs.append(snap_fut)
-            # delta-mode consumption accounting for the pruned pop: which
+            # delta-round consumption accounting for the pruned pop: which
             # (task, priority, bucket) each waved row came from — an O(wave)
             # job over the wave scratch, folded into the write window. Kept
             # current even on rounds the pruner sat out (queued seeds, host
             # cap), so the bucket live-bounds never go stale.
             wave_bkts = None
-            if delta_round and bmeta is not None and not fused:
+            if delta_round and bmeta is not None:
                 wave_bkts = (
                     wave.groupBy(
                         "task",
@@ -1326,10 +1330,7 @@ class CrawlEngine:
             for f in futs:
                 f.result()
         # done iff the new frontier is empty (budget-deferred rows keep it
-        # alive); its size is pure arithmetic over already-known counts —
-        # deferred (candidates minus wave; seq is frontier-unique) + new
-        # links + retries — so no re-scan of the written snapshot is needed
-        n_frontier = (eff_cand - n_wave) + n_links + n_retries
+        # alive)
         done = n_frontier == 0
 
         # per-task next-frontier counts: deferred (cand - used) + links +
@@ -1367,38 +1368,32 @@ class CrawlEngine:
             frontier_unique=next_unique,
             failed_once_add=int(totals["failed"]),
         )
-        if self.frontier_mode == "delta":
-            if delta_round:
-                new_man["frontier_base"] = man.get("frontier_base")
-                new_man["frontier_raw"] = int(raw_next)
-                if bmeta is not None:
-                    new_man["frontier_buckets"] = _merge_consumed(
-                        bmeta, wave_bkts
-                    )
+        if delta_round:
+            new_man["frontier_raw"] = int(raw_next)
+            if bmeta is not None:
+                new_man["frontier_buckets"] = _merge_consumed(bmeta, wave_bkts)
+        else:
+            # this round's snapshot IS the new base (compaction / fresh tiny
+            # base of a fully-consumed round); old deltas are GC'd lazily at
+            # next round start, after this manifest commits
+            new_man["frontier_base"] = rnd
+            snap_counts = snap_fut.result()
+            if snap_counts is not None:
+                bm = _bucket_meta(self.frontier_bucket_rows, snap_counts)
+                new_man["frontier_buckets"] = bm
+                # the bucketed write's partition stats are an EXACT per-task
+                # census of the new base — replace any arithmetic upper
+                # bounds (pruned rounds) with them
+                exact = {t: sum(d.values()) for t, d in bm["raw"].items()}
+                new_man["frontier_counts"] = {
+                    t: n for t, n in exact.items() if n
+                }
+                n_frontier = sum(exact.values())
+                new_man["done"] = n_frontier == 0
             else:
-                # this round's snapshot IS the new base (compaction / fresh
-                # tiny base of a fully-consumed round); old deltas are GC'd
-                # lazily at next round start, after this manifest commits
-                new_man["frontier_base"] = rnd
-                snap_counts = snap_fut.result()
-                if snap_counts is not None:
-                    bm = _bucket_meta(self.frontier_bucket_rows, snap_counts)
-                    new_man["frontier_buckets"] = bm
-                    # the bucketed write's partition stats are an EXACT
-                    # per-task census of the new base — replace any
-                    # arithmetic upper bounds (pruned rounds) with them
-                    exact = {
-                        t: sum(d.values()) for t, d in bm["raw"].items()
-                    }
-                    new_man["frontier_counts"] = {
-                        t: n for t, n in exact.items() if n
-                    }
-                    n_frontier = sum(exact.values())
-                    new_man["done"] = n_frontier == 0
-                else:
-                    new_man.pop("frontier_buckets", None)
-                new_man["frontier_raw"] = int(n_frontier)
-                self._force_frontier_compact = False
+                new_man.pop("frontier_buckets", None)
+            new_man["frontier_raw"] = int(n_frontier)
+            self._force_frontier_compact = False
         # keep the Bloom current with this round's delta (wave-bounded work)
         if self._bloom is not None and n_seen_delta:
             self._desc(rnd, "bloom-delta")
@@ -1416,6 +1411,8 @@ class CrawlEngine:
         )
         new_man["fetch_count"] = man.get("fetch_count", 0) + n_wave
         self.store.commit(rnd, new_man)
+        # the committed frontier holds the stamped seeds now
+        self._pending_seeds = []
         for df in (links_prep, retries_prep):
             if df is not None:
                 df.unpersist()
@@ -1423,19 +1420,21 @@ class CrawlEngine:
         return new_man
 
     def _commit_idle_round(
-        self, man: dict, rnd: int, carries: dict, max_seq: int, n_seen: int,
-        t0: float, done: bool,
+        self, man: dict, rnd: int, carries: dict, n_seen: int, t0: float,
+        done: bool,
     ) -> dict:
         """Commit a zero-wave round: budgets accrue, the frontier is
         unchanged and nothing is written — the manifest keeps pointing at
-        the last materialized frontier."""
+        the last materialized frontier and its max_seq, and seeds queued by
+        run_task stay queued, so the next round stamps the same seqs."""
         for name, t in self.tasks.items():
             carries[name] = [
                 tier_carry_after(c, tier, self.round_s, 0)
                 for c, tier in zip(carries[name], t.limits)
             ]
         new_man = self._advance_manifest(
-            man, rnd, carries, max_seq, done, n_seen, man["frontier_counts"]
+            man, rnd, carries, man["max_seq"], done, n_seen,
+            man["frontier_counts"],
         )
         new_man["frontier_round"] = man["frontier_round"]
         new_man["stats"] = dict(
@@ -1473,16 +1472,14 @@ class CrawlEngine:
             "failed_once_count": int(man["failed_once_count"])
             + int(failed_once_add),
             "frontier_counts": {t: int(n) for t, n in frontier_counts.items()},
+            # the frontier's base and raw size ride through unchanged (the
+            # main write path overrides after advancing the view); the
+            # zero-wave rounds leave the view exactly as it was
+            "frontier_base": man["frontier_base"],
+            "frontier_raw": man["frontier_raw"],
         }
-        # delta-frontier bookkeeping rides through unchanged by default
-        # (the main write path overrides after advancing the view); the
-        # early-return paths (all-deferred / zero-wave rounds) leave the
-        # view — and therefore base + raw size — exactly as it was
-        if man.get("frontier_base") is not None:
-            out["frontier_base"] = man.get("frontier_base")
-            out["frontier_raw"] = man.get("frontier_raw")
-            if man.get("frontier_buckets") is not None:
-                out["frontier_buckets"] = man.get("frontier_buckets")
+        if "frontier_buckets" in man:
+            out["frontier_buckets"] = man["frontier_buckets"]
         return out
 
 

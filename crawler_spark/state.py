@@ -5,17 +5,18 @@ driver-owned table store. Production target is Iceberg (snapshot commits,
 MERGE for frontier updates); this sandbox has no Iceberg runtime, so the
 same protocol is realized on plain parquet:
 
-- mutable state (``frontier``) is rewritten per round under
-  ``rounds/r{N}/frontier`` — the Iceberg equivalent is a MERGE producing a
-  new snapshot. In the engine's DELTA frontier mode (merge-on-read) a
-  budget-bound round instead appends new rows (``frontier_add``) and
-  consumed-seq tombstones (``frontier_del``); ``read_frontier_view``
-  assembles base ∪ adds minus dels, and the base is rewritten only when
-  the raw/live ratio crosses a threshold (rewrite_data_files analog) — so
-  steady-state per-round frontier I/O is O(wave+links), not O(frontier);
-- monotone state (``seen``, ``failed_once``) and outputs (``documents``,
+- the frontier is a base snapshot under ``rounds/r{N}/frontier`` plus
+  per-round row appends (``frontier_add``) and consumed-seq tombstones
+  (``frontier_del``); ``read_frontier_view`` assembles base ∪ adds minus
+  dels (Iceberg merge-on-read). A round over a frontier of at most one
+  bucket rewrites the base (copy-on-write MERGE); a larger budget-bound
+  round appends deltas, and the base is rewritten only when the raw/live
+  ratio crosses a threshold (rewrite_data_files analog) — so steady-state
+  per-round frontier I/O is O(wave+links), not O(frontier);
+- monotone state (``seen``, ``failed_once``) and outputs (``parsed``,
   ``results``, ``order``, ``metrics``, ``failures``, ``lineage``) are
-  append-only, written under ``<table>/round=N/`` — Iceberg appends;
+  append-only, written under ``<table>/round=N/`` — Iceberg appends; the
+  ``documents`` view is derived from ``parsed`` at read time;
 - a round is visible only after its ``commit.json`` (written via tmp+rename,
   atomic on POSIX) exists. Resume = max committed round; uncommitted
   round directories are ignored and overwritten, which is exactly
@@ -32,12 +33,12 @@ Everything else in the engine is unchanged — the store is the only seam.
 
 | parquet stand-in (here)              | Iceberg equivalent |
 |--------------------------------------|--------------------|
-| ``write_frontier`` (full rewrite under ``rounds/r{N}/frontier``) | copy-on-write ``MERGE INTO frontier USING wave ON key WHEN MATCHED UPDATE/DELETE WHEN NOT MATCHED INSERT`` — one new snapshot per round |
+| ``write_frontier`` (base rewrite under ``rounds/r{N}/frontier``) | copy-on-write ``MERGE INTO frontier USING wave ON key WHEN MATCHED UPDATE/DELETE WHEN NOT MATCHED INSERT`` — one new snapshot per round |
 | ``append(table, rnd, df)`` under ``<table>/round=N/`` | ``df.writeTo(table).append()`` — Iceberg appends are already snapshot-atomic; the ``round=N`` subdir becomes a plain ``round`` partition column |
 | ``commit.json`` tmp+rename barrier | unnecessary — every Iceberg write IS an atomic snapshot commit; the cross-TABLE round barrier maps to a ``round`` watermark row appended last (or Nessie/REST-catalog multi-table transaction where available) |
 | ``latest_round`` (max committed manifest) | ``SELECT max(round)`` from the watermark table, or ``snapshot_id`` from ``<table>.snapshots`` metadata |
 | resume (ignore uncommitted round dirs) | time-travel read of the last committed snapshot: ``spark.read.option("snapshot-id", …)`` — uncommitted work is invisible by construction |
-| delta-frontier mode: ``frontier_add`` rows + ``frontier_del`` seq tombstones, assembled by ``read_frontier_view`` (base ∪ adds − dels) | merge-on-read table (``write.merge.mode=merge-on-read``): adds are appends, dels are positional/equality delete files; the read-side anti-join is what Iceberg readers do natively |
+| delta rounds: ``frontier_add`` rows + ``frontier_del`` seq tombstones, assembled by ``read_frontier_view`` (base ∪ adds − dels) | merge-on-read table (``write.merge.mode=merge-on-read``): adds are appends, dels are positional/equality delete files; the read-side anti-join is what Iceberg readers do natively |
 | base rewrite when raw/live ratio crosses threshold (``write_frontier`` after deltas) + ``drop_frontier_deltas`` | ``CALL spark_catalog.system.rewrite_data_files(table => 'frontier')`` — compacts delete files into a new base; delta GC is automatic |
 | ``compact(table, upto)`` (small-files merge with crash-safe marker; ``recover_compactions``) | ``rewrite_data_files`` with a snapshot-age filter; crash safety comes free from snapshot isolation (a failed rewrite commits nothing) |
 | ``expire_frontiers(keep_last)`` (delete old round dirs, ``protect`` pins) | ``CALL spark_catalog.system.expire_snapshots(table => 'frontier', retain_last => k)`` + ``remove_orphan_files``; ``protect`` = Iceberg branch/tag refs on pinned snapshots |
@@ -60,18 +61,17 @@ class SnapshotStore:
         "seen",
         "failed_once",
         "parsed",
-        "documents",
         "results",
         "order",
         "metrics",
         "failures",
         "lineage",
-        # delta-frontier mode (merge-on-read): per-round row appends and
-        # consumed-seq tombstones. NEVER compact() these across a frontier
-        # base boundary — the view reader filters round > base, so a merged
-        # dir labeled with a round above the base would double-count rows
-        # already folded into the base. The engine GCs them wholesale when
-        # it writes a new base (drop_frontier_deltas).
+        # the frontier's delta rounds (merge-on-read): per-round row
+        # appends and consumed-seq tombstones. NEVER compact() these across
+        # a frontier base boundary — the view reader filters round > base,
+        # so a merged dir labeled with a round above the base would
+        # double-count rows already folded into the base. The engine GCs
+        # them wholesale when it writes a new base (drop_frontier_deltas).
         "frontier_add",
         "frontier_del",
     )
@@ -109,18 +109,20 @@ class SnapshotStore:
     ) -> list | None:
         """Write the frontier base snapshot for round ``rnd``.
 
-        With ``bucket_rows`` set (delta mode), the base is written
-        PARTITIONED by (task, priority, _pbkt = seq div bucket_rows) —
-        the parquet stand-in for an Iceberg table partitioned on the pop
-        sort key. Because the wave pop is ordered (-priority, seq), the
-        (priority desc, _pbkt asc) directory walk enumerates rows in pop
-        order, so a budget-bound round can PARTITION-PRUNE the base read
-        to the pop-order prefix covering its wave (engine.py pruned-pop
-        path) instead of scanning O(frontier). Returns the per-(task,
-        priority, _pbkt) row counts — read back from the written files'
-        partition columns only (zero data columns scanned) — which the
-        engine persists in the manifest as the pruning metadata (the
-        Iceberg partition-stats analog).
+        Without ``bucket_rows`` the base is one plain parquet directory
+        (the engine's choice for a frontier of at most one bucket). With
+        ``bucket_rows`` set, the base is written PARTITIONED by (task,
+        priority, _pbkt = seq div bucket_rows) — the parquet stand-in for
+        an Iceberg table partitioned on the pop sort key. Because the wave
+        pop is ordered (-priority, seq), the (priority desc, _pbkt asc)
+        directory walk enumerates rows in pop order, so a budget-bound
+        round can PARTITION-PRUNE the base read to the pop-order prefix
+        covering its wave (engine.py pruned-pop path) instead of scanning
+        O(frontier). Returns the per-(task, priority, _pbkt) row counts —
+        read back from the written files' partition columns only (zero data
+        columns scanned) — which the engine persists in the manifest as the
+        pruning metadata (the Iceberg partition-stats analog); None for a
+        plain base.
         """
         from pyspark.sql import functions as F
 
@@ -355,18 +357,22 @@ class SnapshotStore:
             return StructType.fromDDL("seq bigint")
         return None
 
-    def read_through(self, table: str, rnd: int) -> DataFrame | None:
-        """Union of committed deltas round<=rnd (read-committed view)."""
-        if table == "documents":
-            return self._read_documents(rnd)
+    def _round_dirs(self, table: str, rnd: int) -> list[str]:
+        """The ``round=N`` delta directories of ``table`` with N <= rnd."""
         base = os.path.join(self.root, table)
         if not os.path.isdir(base):
-            return None
-        dirs = [
+            return []
+        return [
             os.path.join(base, d)
             for d in os.listdir(base)
             if d.startswith("round=") and int(d.split("=")[1]) <= rnd
         ]
+
+    def read_through(self, table: str, rnd: int) -> DataFrame | None:
+        """Union of committed deltas round<=rnd (read-committed view)."""
+        if table == "documents":
+            return self._read_documents(rnd)
+        dirs = self._round_dirs(table, rnd)
         if not dirs:
             return None
         reader = self.spark.read
@@ -381,49 +387,26 @@ class SnapshotStore:
         frame as both its materialization barrier and the durable output;
         writing a separate documents table doubled the round's largest
         write). Iceberg analog: a view (or partition-projected metadata
-        table) over the parsed snapshots. Falls back to a materialized
-        documents table for stores written before this layout (and for
-        compacted bases)."""
+        table) over the parsed snapshots."""
         from pyspark.sql import functions as F
 
         from .operators.parse import spans_col
 
-        out = None
-        base = os.path.join(self.root, "parsed")
-        if os.path.isdir(base):
-            dirs = [
-                os.path.join(base, d)
-                for d in os.listdir(base)
-                if d.startswith("round=") and int(d.split("=")[1]) <= rnd
-            ]
-            if dirs:
-                out = (
-                    self.spark.read.option("basePath", base)
-                    .parquet(*dirs)
-                    # `ok` is a PARTITION column of the parsed delta
-                    # (discovered as string); the equality filter still
-                    # prunes at file-listing level
-                    .filter(F.col("ok").cast("boolean"))
-                    .select(
-                        F.col("curl").alias("doc_id"),
-                        spans_col().alias("spans"),
-                        "round",
-                    )
-                )
-        legacy = os.path.join(self.root, "documents")
-        if os.path.isdir(legacy):
-            dirs = [
-                os.path.join(legacy, d)
-                for d in os.listdir(legacy)
-                if d.startswith("round=") and int(d.split("=")[1]) <= rnd
-            ]
-            if dirs:
-                mat = self.spark.read.option("basePath", legacy).parquet(*dirs)
-                if "round" not in mat.columns:
-                    mat = mat.withColumn("round", F.lit(None).cast("int"))
-                mat = mat.select("doc_id", "spans", "round")
-                out = mat if out is None else out.unionByName(mat)
-        return out
+        dirs = self._round_dirs("parsed", rnd)
+        if not dirs:
+            return None
+        return (
+            self.spark.read.option("basePath", os.path.join(self.root, "parsed"))
+            .parquet(*dirs)
+            # `ok` is a PARTITION column of the parsed delta (discovered as
+            # string); the equality filter still prunes at file-listing level
+            .filter(F.col("ok").cast("boolean"))
+            .select(
+                F.col("curl").alias("doc_id"),
+                spans_col().alias("spans"),
+                "round",
+            )
+        )
 
     def commit(self, rnd: int, manifest: dict) -> None:
         os.makedirs(self._round_dir(rnd), exist_ok=True)
@@ -519,9 +502,10 @@ class SnapshotStore:
     def expire_frontiers(self, keep_last: int = 2, protect: set[int] | None = None) -> int:
         """Drop frontier snapshots older than the last ``keep_last``
         committed rounds (manifests are kept — resume still works from the
-        newest snapshot). ``protect``: rounds never expired — the latest
-        manifest's ``frontier_base`` in delta mode, which may be arbitrarily
-        far behind. Returns the number of snapshots removed."""
+        newest snapshot). ``protect``: rounds never expired. The latest
+        manifest's ``frontier_base``, which delta rounds may leave
+        arbitrarily far behind, is always protected. Returns the number of
+        snapshots removed."""
         base = os.path.join(self.root, "rounds")
         if not os.path.isdir(base):
             return 0
@@ -533,9 +517,7 @@ class SnapshotStore:
         # the newest manifest's frontier_base is always implicitly protected
         if committed:
             last = self.manifest(committed[-1])
-            fb = last.get("frontier_base")
-            if fb is not None:
-                protect = (protect or set()) | {int(fb)}
+            protect = (protect or set()) | {int(last["frontier_base"])}
         removed = 0
         for rnd in committed[: max(0, len(committed) - keep_last)]:
             if protect and rnd in protect:

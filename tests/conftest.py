@@ -10,7 +10,7 @@ from crawler_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark("tests")
     yield s
     s.stop()
 

@@ -129,3 +129,58 @@ def test_dynamic_metrics_match(dynamic_crawl):
         for m in oracle.metrics
     )
     assert got == want
+
+
+def test_seeds_pushed_before_an_idle_round_are_fetched(spark, tmp_path):
+    """A round with zero budget waves nothing; seeds run_task queued before
+    it must survive it and be fetched in the round the oracle fetches
+    them, with the same seqs."""
+    from crawler_spark import schemas
+    from crawler_spark.textcore import LimitTier, Rule, TaskCfg
+
+    host = "leaf.example.com"
+    pages = [
+        {"url": f"http://{host}/p/{i}", "host": host, "status": 200,
+         "body": f"<h1>{i}</h1>\n" + "pad\n" * 2500, "latency_ms": 1}
+        for i in range(5)
+    ]
+    rows = []
+    for p in pages:
+        cu = canonicalize(p["url"])
+        rows.append(
+            {"url": p["url"], "curl": cu, "host": host, "method": "GET",
+             "key": seen_key(cu), "task": "t", "rule": "leaf", "depth": 0,
+             "priority": 0, "tmp": {}}
+        )
+    seeds = [dict(r, seq=i, attempt=0) for i, r in enumerate(rows[:4])]
+    pushed = rows[4:]
+    # one fetch per 120 s at 60 s rounds: budgets 1, 1, 0, 1, 0, ...
+    tasks = [TaskCfg(name="t", max_depth=5, limits=(LimitTier(1, 120, 1),))]
+    rules = [Rule(task="t", rule="leaf")]
+
+    def on_round(rnd, ctl):
+        if rnd == 2:
+            ctl.push_seeds("t", pushed)
+
+    oracle = run_oracle(seeds, pages, tasks, rules, [], 60, on_round=on_round)
+
+    eng = CrawlEngine(
+        spark, str(tmp_path / "state"), GraphFetcher(spark.createDataFrame(pages)),
+        tasks, rules, [], 60,
+    )
+    eng.init_state(spark.createDataFrame(seeds, schemas.FRONTIER))
+    eng.run(max_rounds=2)
+    eng.run_task("t", pushed)  # round 3 has no budget
+    eng.run()
+    rnd = eng.store.latest_round()
+    got = (
+        eng.store.read_through("order", rnd)
+        .orderBy("round", F.desc("priority"), "seq")
+        .select("curl", "round")
+        .collect()
+    )
+    assert [(r["curl"], r["round"]) for r in got] == [
+        (u, rd) for _, u, rd in oracle.order
+    ]
+    seen = {r["key"] for r in eng.store.read_through("seen", rnd).collect()}
+    assert seen == oracle.seen

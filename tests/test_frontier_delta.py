@@ -1,13 +1,15 @@
-"""Merge-on-read delta frontier mode (engine frontier_mode="delta").
+"""Merge-on-read delta rounds of the frontier.
 
-Snapshot mode rewrites the surviving frontier every round — O(frontier)
-write I/O to consume O(wave), the dominant per-round cost of a budget-bound
-10^10-URL crawl. Delta mode appends links/retries + consumed-seq tombstones
-and folds to a fresh base only on the arithmetic compaction trigger. These
-tests pin byte-parity of the two modes on the full fixture (duplicate
-links + multi-tier budgets — both delta hazards present), the loser-
-tombstone semantics on a handcrafted budget-bound graph with a failing
-page, and kill+resume in delta mode.
+A round over a frontier of at most ``frontier_bucket_rows`` live rows
+rewrites the surviving frontier — O(frontier) write I/O to consume O(wave).
+A larger frontier's budget-bound rounds append links/retries + consumed-seq
+tombstones and fold to a fresh base only on the arithmetic compaction
+trigger. These tests run a reference engine at the default bucket size
+(every round rewrites) against one whose small ``frontier_bucket_rows``
+makes delta rounds engage, and pin byte-parity on the full fixture
+(duplicate links + multi-tier budgets — both delta hazards present), the
+loser-tombstone semantics on a handcrafted budget-bound graph with a
+failing page, and kill+resume across delta rounds.
 """
 
 from __future__ import annotations
@@ -34,11 +36,11 @@ def _final_state(eng):
     return rnd, order, seen
 
 
-def _run(spark, root, fx_dir, fx, mode, **kw):
+def _run(spark, root, fx_dir, fx, name, **kw):
     web = spark.read.parquet(f"{fx_dir}/web_graph")
     eng = CrawlEngine(
-        spark, f"{root}/state_{mode}", GraphFetcher(web), fx.tasks, fx.rules,
-        fx.robots, fx.round_s, frontier_mode=mode, **kw,
+        spark, f"{root}/state_{name}", GraphFetcher(web), fx.tasks, fx.rules,
+        fx.robots, fx.round_s, **kw,
     )
     eng.init_state(spark.read.parquet(f"{fx_dir}/seeds"))
     eng.run()
@@ -49,8 +51,10 @@ def test_delta_matches_snapshot_on_full_fixture(spark, tmpdir_):
     fx = make_fixture()
     write_fixture(fx, f"{tmpdir_}/fx", spark)
     snap = _run(spark, tmpdir_, f"{tmpdir_}/fx", fx, "snapshot")
+    # 32 rows per bucket: rounds over 2 and 17 live rows rewrite, the
+    # larger middle rounds may append deltas, the last one rewrites again
     delt = _run(spark, tmpdir_, f"{tmpdir_}/fx", fx, "delta",
-                frontier_compact_factor=3.0)
+                frontier_compact_factor=3.0, frontier_bucket_rows=32)
     assert _final_state(snap) == _final_state(delt)
     # the delta path genuinely engaged: some committed round has no
     # frontier snapshot dir (its view lives in base + add/del deltas)
@@ -106,15 +110,49 @@ def _hub_fixture():
     return pages, seeds, tasks, rules
 
 
+def test_rewrite_base_layout_follows_written_size(spark, tmpdir_):
+    """A base is bucketed only when the frontier it WRITES exceeds one
+    bucket: the 4 leaf seeds (2 rows per bucket) get a bucketed base, and
+    the unbudgeted round 1 that consumes them all writes its lone retry
+    (page C fails) as a plain base."""
+    from crawler_spark import schemas
+
+    pages, seeds, _, rules = _hub_fixture()
+    leaves = [p for p in pages if "/leaf/" in p["url"]]
+    seeds = [
+        {**seeds[0], "url": p["url"], "curl": canonicalize(p["url"]),
+         "key": seen_key(canonicalize(p["url"])), "rule": "leaf", "seq": i}
+        for i, p in enumerate(leaves)
+    ]
+    eng = CrawlEngine(
+        spark, f"{tmpdir_}/st", GraphFetcher(spark.createDataFrame(pages)),
+        [TaskCfg(name="t")], rules, [], round_s=60, frontier_bucket_rows=2,
+    )
+    eng.init_state(spark.createDataFrame(seeds, schemas.FRONTIER))
+    eng.run()
+    assert "frontier_buckets" in eng.store.manifest(0)
+    assert eng.store.manifest(1)["frontier_counts"] == {"t": 1}
+    assert "frontier_buckets" not in eng.store.manifest(1)
+    rnd = eng.store.latest_round()
+    order = [r["curl"] for r in eng.store.read_through("order", rnd).collect()]
+    # every leaf fetched once, and C once more from the plain base
+    assert sorted(order) == sorted(
+        [canonicalize(p["url"]) for p in leaves] + [canonicalize(leaves[0]["url"])]
+    )
+
+
+# "snapshot": the default bucket size, every round rewrites; "delta": two
+# rows per bucket, so the 6-row round 2 frontier takes a delta round
 @pytest.mark.parametrize("mode", ["snapshot", "delta"])
 def test_loser_tombstones_and_retry_order(spark, tmpdir_, mode):
     from crawler_spark import schemas
 
     pages, seeds, tasks, rules = _hub_fixture()
     web = spark.createDataFrame(pages)
+    kw = {"frontier_bucket_rows": 2} if mode == "delta" else {}
     eng = CrawlEngine(
         spark, f"{tmpdir_}/st_{mode}", GraphFetcher(web), tasks, rules, [],
-        round_s=60, frontier_mode=mode, frontier_compact_factor=10.0,
+        round_s=60, frontier_compact_factor=10.0, **kw,
     )
     eng.init_state(spark.createDataFrame(seeds, schemas.FRONTIER))
     eng.run()
@@ -127,7 +165,7 @@ def test_loser_tombstones_and_retry_order(spark, tmpdir_, mode):
     )
     c_rows = [o for o in order if o[2].endswith("/leaf/C")]
     # C fetched EXACTLY twice: the dedup winner and its single retry — the
-    # same-key dedup LOSER must never resurface, even though in delta mode
+    # same-key dedup LOSER must never resurface, even though in a delta round
     # it stays physically present until tombstoned
     assert len(c_rows) == 2, order
     # the retry carries a FRESH seq above every other fetched seq; the
@@ -161,13 +199,14 @@ def test_delta_mode_kill_and_resume(spark, tmpdir_):
     ref.init_state(seeds)
     ref.run()
 
+    # 8 rows per bucket: every round after the 2-seed first one is large
     d1 = CrawlEngine(spark, f"{tmpdir_}/delta", GraphFetcher(web), fx.tasks,
-                     fx.rules, fx.robots, fx.round_s, frontier_mode="delta",
-                     frontier_compact_factor=4.0)
+                     fx.rules, fx.robots, fx.round_s,
+                     frontier_compact_factor=4.0, frontier_bucket_rows=8)
     d1.init_state(seeds)
     d1.run(max_rounds=2)  # simulated kill
     d2 = CrawlEngine(spark, f"{tmpdir_}/delta", GraphFetcher(web), fx.tasks,
-                     fx.rules, fx.robots, fx.round_s, frontier_mode="delta",
-                     frontier_compact_factor=4.0)
+                     fx.rules, fx.robots, fx.round_s,
+                     frontier_compact_factor=4.0, frontier_bucket_rows=8)
     d2.run()  # resume from the committed manifest (base + deltas)
     assert _final_state(ref) == _final_state(d2)

@@ -1,17 +1,19 @@
-"""Pruned-pop base reads in delta frontier mode.
+"""Pruned-pop base reads of a frontier larger than one bucket.
 
-Delta mode bounds per-round WRITES at O(wave+links); the pruned pop bounds
+Delta rounds bound per-round WRITES at O(wave+links); the pruned pop bounds
 the per-round base READ too: bases are written partitioned on the pop sort
 key (task, priority, seq div bucket_rows) with their partition stats in
 the manifest, and a budget-bound round partition-prunes the base scan to
 the pop-order prefix covering its budgets (engine.py pruned-pop block) —
 O(wave) instead of O(frontier). These tests pin:
 
-- wave-order/byte parity of pruned-delta vs snapshot on a budget-bound
-  frontier large enough (vs bucket_rows) for genuinely partial prefixes;
+- wave-order/byte parity of pruned-delta vs a reference engine whose
+  default bucket size makes every round rewrite the frontier, on a
+  budget-bound frontier large enough (vs bucket_rows) for genuinely
+  partial prefixes;
 - the measure-and-widen loop: a frontier whose pop-order head is dead
   rows (overdepth — the compacted-in-dead-links analog) must widen until
-  the prefix holds the real wave, still matching snapshot mode;
+  the prefix holds the real wave, still matching the reference;
 - consumption advancing the low-water mark: later rounds keep pruning
   (prefix never regrows to the consumed head).
 """
@@ -51,13 +53,15 @@ def _engines(spark, tmpdir_, frontier, web, budget, rounds, **delta_kw):
         task_budget_per_round=budget
     )
     out = {}
+    # "snapshot": the default bucket size holds the whole frontier, so every
+    # round rewrites it; "delta": delta_kw's small buckets
     for mode, kw in (
         ("snapshot", {}),
         ("delta", {"frontier_compact_factor": 100.0, **delta_kw}),
     ):
         eng = CrawlEngine(
             spark, f"{tmpdir_}/state_{mode}", GraphFetcher(web), tasks,
-            rules, robots, round_s=60, frontier_mode=mode, **kw,
+            rules, robots, round_s=60, **kw,
         )
         eng.init_state(frontier)
         eng.run(max_rounds=rounds)
@@ -94,7 +98,7 @@ def test_pruned_widens_past_dead_prefix(spark, tmpdir_):
     """Pop-order head = overdepth rows (depth 99 > max_depth): partition
     stats overcount live rows there, so the first prefix guess holds zero
     eligible rows and the widening loop must expand until the true wave
-    fits — and the result must still equal snapshot mode exactly."""
+    fits — and the result must still equal the reference exactly."""
     n_books, n_dead, budget, bucket = 600, 256, 50, 32
     web = big_web_graph(
         spark, n_tags=1, lists_per_tag=max(1, -(-n_books // 60)),

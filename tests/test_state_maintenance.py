@@ -22,7 +22,7 @@ def _seed_store(spark, root, n_rounds=5):
         )
         st.append("seen", r, df)
         st.write_frontier(r, spark.range(3).select(F.col("id").alias("seq")))
-        st.commit(r, {"round": r})
+        st.commit(r, {"round": r, "frontier_base": r})
     return st
 
 
